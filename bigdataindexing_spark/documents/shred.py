@@ -15,9 +15,13 @@ Array order (the reference's ``Arrays.toString`` rendering,
 PlanService.java:66) is carried as the explicit ``ord`` column from
 ``posexplode`` so reassembly is deterministic through any shuffle.
 
-At scale: shredding is a handful of narrow projections + one posexplode —
-no shuffle at all until the per-type writes; each output table can be
-written partitioned/bucketed by object_id.
+Scale notes: shredding is a handful of narrow projections + one
+posexplode — no shuffle at all. The five relations are written as
+concurrent jobs (``store_dirs.write_parquet_concurrently``), so a store
+write costs the longest relation's job, not the sum of five; each output
+table can be written partitioned/bucketed by object_id. The store's
+schema is fixed here (``STORE_SCHEMAS``), so opening a store reads with
+declared schemas and launches no schema-inference job.
 """
 
 from __future__ import annotations
@@ -26,6 +30,8 @@ from dataclasses import dataclass, fields
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bigdataindexing_spark.sources.store_dirs import write_parquet_concurrently
 
 
 @dataclass
@@ -38,6 +44,20 @@ class ShreddedTables:
 
     def as_dict(self) -> dict[str, DataFrame]:
         return {f.name: getattr(self, f.name) for f in fields(self)}
+
+
+# The schema (DDL) of every relation :func:`shred` produces, in
+# ShreddedTables field order. Store readers declare it instead of
+# inferring it from the Parquet footers (one Spark job per relation);
+# tests/test_ingest.py pins it to what Spark infers from each layout.
+STORE_SCHEMAS: dict[str, str] = {
+    "plans": "object_id STRING, org STRING, plan_type STRING, creation_date STRING",
+    "plan_services": "object_id STRING, org STRING",
+    "services": "object_id STRING, org STRING, name STRING",
+    "member_cost_shares": "object_id STRING, org STRING, deductible BIGINT, copay BIGINT",
+    "edges": "parent_type STRING, parent_id STRING, field STRING, ord INT, "
+    "child_type STRING, child_id STRING",
+}
 
 
 def _cost_share_rows(col: F.Column) -> list[F.Column]:
@@ -144,15 +164,18 @@ def shred(docs: DataFrame, doc_col: str = "doc") -> ShreddedTables:
 
 
 def write_tables(tables: ShreddedTables, out_dir: str) -> None:
-    """Materialize the shredded store as Parquet (the Redis replacement)."""
-    for name, df in tables.as_dict().items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
+    """Materialize the shredded store as Parquet (the Redis replacement),
+    one concurrent job per relation."""
+    write_parquet_concurrently(
+        [(df, f"{out_dir}/{name}.parquet") for name, df in tables.as_dict().items()]
+    )
 
 
 def read_tables(spark, out_dir: str) -> ShreddedTables:
+    """Open a store written by :func:`write_tables`; launches no job."""
     return ShreddedTables(
         **{
-            name: spark.read.parquet(f"{out_dir}/{name}.parquet")
-            for name in ("plans", "plan_services", "services", "member_cost_shares", "edges")
+            name: spark.read.schema(schema).parquet(f"{out_dir}/{name}.parquet")
+            for name, schema in STORE_SCHEMAS.items()
         }
     )

@@ -54,23 +54,37 @@ def _nested(doc: F.Column, path: str) -> F.Column:
     return c
 
 
-def validate(raw: DataFrame, value_col: str = "value") -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantine): valid has a typed ``doc`` struct column;
-    quarantine keeps the raw body plus a ``reason`` array column.
+def annotate(raw: DataFrame, value_col: str = "value") -> DataFrame:
+    """Parse each body into a typed ``doc`` struct and attach its
+    ``reason`` array (empty when the document is valid).
 
+    This is the expensive half of validation (``from_json`` plus the
+    interpreted ``F.exists`` checks); a caller that writes both halves of
+    :func:`split` persists this relation so the parse runs once.
     Type violations (e.g. ``copay: "x"``) surface as a null parsed struct
-    (PERMISSIVE corrupt-record semantics) or a null required leaf — both
-    routes land in quarantine, mirroring BadRequestException at
-    PlanController.java:94.
-    """
+    (PERMISSIVE corrupt-record semantics) or a null required leaf."""
     parsed = raw.withColumn("doc", F.from_json(F.col(value_col), PLAN_SCHEMA))
     missing = _missing_required(F.col("doc"))
-    annotated = parsed.withColumn(
+    return parsed.withColumn(
         "reason",
         F.when(F.col("doc").isNull(), F.array(F.lit("malformed_json"))).otherwise(
             missing
         ),
     )
+
+
+def split(annotated: DataFrame, value_col: str = "value") -> tuple[DataFrame, DataFrame]:
+    """(valid, quarantine) of an :func:`annotate` result."""
     valid = annotated.filter(F.size("reason") == 0).select(value_col, "doc")
     quarantine = annotated.filter(F.size("reason") > 0).select(value_col, "reason")
     return valid, quarantine
+
+
+def validate(raw: DataFrame, value_col: str = "value") -> tuple[DataFrame, DataFrame]:
+    """(valid, quarantine): valid has a typed ``doc`` struct column;
+    quarantine keeps the raw body plus a ``reason`` array column.
+
+    Both malformed bodies and missing required fields land in quarantine,
+    mirroring BadRequestException at PlanController.java:94.
+    """
+    return split(annotate(raw, value_col), value_col)

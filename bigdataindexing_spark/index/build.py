@@ -23,12 +23,11 @@ analogue of the reference's ES inverted index).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdataindexing_spark.functions.text import tokens
+from bigdataindexing_spark.sources.store_dirs import write_parquet_concurrently
 
 
 def term_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -106,38 +105,17 @@ def write_index(docs: DataFrame, out_dir: str) -> None:
     ``postings_from_rows`` over a persisted ``term_rows`` — the persist
     is the snapshot."""
 
-    def _write_rows() -> None:
-        (
-            docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-            .filter(F.col("token") != "")
-            .repartition("token")
-            .groupBy("token", "doc_id")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .sortWithinPartitions("token")
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/term_rows.parquet")
-        )
-
-    def _write_postings() -> None:
-        postings(docs).sortWithinPartitions("token").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/postings.parquet")
-
-    errors: list[BaseException] = []
-
-    def _run(fn) -> None:
-        try:
-            fn()
-        except BaseException as e:  # propagate to the caller's thread
-            errors.append(e)
-
-    threads = [
-        threading.Thread(target=_run, args=(fn,), daemon=True)
-        for fn in (_write_rows, _write_postings)
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise errors[0]
+    rows = (
+        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
+        .filter(F.col("token") != "")
+        .repartition("token")
+        .groupBy("token", "doc_id")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .sortWithinPartitions("token")
+    )
+    write_parquet_concurrently(
+        [
+            (rows, f"{out_dir}/term_rows.parquet"),
+            (postings(docs).sortWithinPartitions("token"), f"{out_dir}/postings.parquet"),
+        ]
+    )

@@ -7,22 +7,27 @@ enqueues an index action, we ingest a *directory* of JSON-lines files —
 batch for backfill, Structured Streaming for continuous ingest — through
 the same validate → shred → store pipeline, set-oriented end to end.
 
-Scale notes: ingest is embarrassingly parallel until the per-type writes
-(narrow projections + one posexplode); the streaming variant appends
-batchId-keyed partial directories (idempotent under replay, same pattern
-as the index maintenance sink) so a restart never double-writes documents.
+Scale notes: ingest is embarrassingly parallel (narrow projections + one
+posexplode). Each ingest — the batch and every micro-batch — parses and
+validates its input once: the annotated relation is persisted while the
+six relations (five shredded + quarantine) are written as concurrent jobs
+that share it, then released. The streaming variant appends batchId-keyed
+partial directories (idempotent under replay, same pattern as the index
+maintenance sink) so a restart never double-writes documents. Stores are
+opened with the declared ``STORE_SCHEMAS``, so an open launches no job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bigdataindexing_spark.documents.shred import ShreddedTables, shred
-from bigdataindexing_spark.documents.validate import validate
+from bigdataindexing_spark.documents.shred import STORE_SCHEMAS, ShreddedTables, shred
+from bigdataindexing_spark.documents.validate import annotate, split
 from bigdataindexing_spark.registry import register
+from bigdataindexing_spark.sources.store_dirs import write_parquet_concurrently
 from bigdataindexing_spark.streaming.core import run_foreach_batch
 
-TABLE_NAMES = ("plans", "plan_services", "services", "member_cost_shares", "edges")
+TABLE_NAMES = tuple(STORE_SCHEMAS)
 
 
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -35,6 +40,23 @@ def stream_documents(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.text(path)
 
 
+def _write_store(raw: DataFrame, path_of) -> tuple[ShreddedTables, DataFrame]:
+    """Validate + shred ``raw`` and overwrite each relation at
+    ``path_of(name)``. The annotated relation is persisted for the
+    duration of the writes, so the six concurrent jobs parse the input
+    once (a task that needs a block another task is computing waits for
+    it), and is released even when a write fails."""
+    annotated = annotate(raw).persist()
+    try:
+        valid, quarantine = split(annotated)
+        tables = shred(valid)
+        relations = {**tables.as_dict(), "quarantine": quarantine}
+        write_parquet_concurrently([(df, path_of(name)) for name, df in relations.items()])
+    finally:
+        annotated.unpersist()
+    return tables, quarantine
+
+
 def ingest_batch(
     spark: SparkSession, in_path: str, out_dir: str
 ) -> tuple[ShreddedTables, DataFrame]:
@@ -43,26 +65,14 @@ def ingest_batch(
     Returns the shredded tables and the quarantine DataFrame (written to
     ``<out_dir>/quarantine.parquet`` with the violation reasons, the batch
     analogue of the reference's HTTP 400)."""
-    raw = read_documents(spark, in_path)
-    valid, quarantine = validate(raw)
-    tables = shred(valid)
-    for name, df in tables.as_dict().items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
-    quarantine.write.mode("overwrite").parquet(f"{out_dir}/quarantine.parquet")
-    return tables, quarantine
+    return _write_store(
+        read_documents(spark, in_path), lambda name: f"{out_dir}/{name}.parquet"
+    )
 
 
 def _append_partials(out_dir: str):
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        valid, quarantine = validate(batch_df)
-        tables = shred(valid)
-        for name, df in tables.as_dict().items():
-            df.write.mode("overwrite").parquet(
-                f"{out_dir}/{name}/batch={batch_id}"
-            )
-        quarantine.write.mode("overwrite").parquet(
-            f"{out_dir}/quarantine/batch={batch_id}"
-        )
+        _write_store(batch_df, lambda name: f"{out_dir}/{name}/batch={batch_id}")
 
     return fn
 
@@ -76,10 +86,14 @@ def ingest_stream(spark: SparkSession, in_path: str, out_dir: str) -> None:
 
 
 def read_store(spark: SparkSession, out_dir: str, streaming: bool = False) -> ShreddedTables:
-    """Read the shredded store written by either ingest path."""
+    """Read the shredded store written by either ingest path; launches no job."""
     def rd(name: str) -> DataFrame:
         path = f"{out_dir}/{name}" if streaming else f"{out_dir}/{name}.parquet"
-        return spark.read.option("recursiveFileLookup", "true").parquet(path)
+        return (
+            spark.read.schema(STORE_SCHEMAS[name])
+            .option("recursiveFileLookup", "true")
+            .parquet(path)
+        )
 
     return ShreddedTables(**{name: rd(name) for name in TABLE_NAMES})
 

@@ -11,6 +11,8 @@ round driver and a probe REPL, or two notebook kernels). Per-session
 dedupe is the in-memory ``(applicationId, sf_dir)`` cache each call
 site already keeps. On a cluster these would be object-store prefixes
 owned by a catalog with TTL policy; atexit is the local-mode analogue.
+
+Multi-relation stores are written through :func:`write_parquet_concurrently`.
 """
 
 from __future__ import annotations
@@ -18,6 +20,9 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
+
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame
 
 _CREATED: list[str] = []
 
@@ -35,6 +40,33 @@ def session_store_dir(kind: str) -> str:
     path = tempfile.mkdtemp(prefix=f"bdi_store_{kind}_")
     _CREATED.append(path)
     return path
+
+
+def write_parquet_concurrently(writes: list[tuple[DataFrame, str]]) -> None:
+    """Overwrite each ``(DataFrame, path)`` of ``writes`` as Parquet, all
+    of them as concurrent Spark jobs; re-raise the first failure here.
+
+    The one write path of every multi-relation store (shredded documents,
+    ingest partials, the inverted index). No single relation's write
+    saturates a local cluster, so overlapping the jobs reclaims idle
+    cores. ``InheritableThread`` copies the caller's local properties
+    into each writer, so every job stays in the caller's job group:
+    attributable and cancellable with ``cancelJobGroup``."""
+    errors: list[BaseException] = []
+
+    def write(df: DataFrame, path: str) -> None:
+        try:
+            df.write.mode("overwrite").parquet(path)
+        except BaseException as e:  # re-raised in the caller's thread below
+            errors.append(e)
+
+    threads = [InheritableThread(target=write, args=w, daemon=True) for w in writes]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
 
 
 class SessionParquetStore:

@@ -13,11 +13,14 @@ Design notes for scale:
 - ``run_available_now`` drains the source with the availableNow trigger —
   the batch-replay mode that makes streaming plans deterministically
   testable (stream result ≡ batch result on the same input);
-- checkpoint dirs are caller-owned; on a cluster they'd be durable storage.
+- a checkpoint the caller passes is caller-owned (on a cluster it would be
+  durable storage, and crash-replay needs it to survive); without one, the
+  drain uses a temporary checkpoint and removes it when the drain ends.
 """
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import tempfile
 
@@ -65,6 +68,13 @@ def stream_dir(spark: SparkSession, path: str, schema) -> DataFrame:
     return spark.readStream.schema(schema).parquet(path)
 
 
+def _checkpoint(checkpoint: str | None):
+    """The caller's checkpoint dir, or a temporary one removed on exit."""
+    if checkpoint:
+        return contextlib.nullcontext(checkpoint)
+    return tempfile.TemporaryDirectory(prefix="ckpt_", ignore_cleanup_errors=True)
+
+
 def run_available_now(
     sdf: DataFrame,
     output_mode: str = "complete",
@@ -73,16 +83,16 @@ def run_available_now(
     """Drain a streaming DataFrame with availableNow into a memory sink and
     return the result as a batch DataFrame."""
     qname = f"stream_result_{next(_qname_counter)}"
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
-    query = (
-        sdf.writeStream.trigger(availableNow=True)
-        .format("memory")
-        .queryName(qname)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    query.awaitTermination()
+    with _checkpoint(checkpoint) as ckpt:
+        query = (
+            sdf.writeStream.trigger(availableNow=True)
+            .format("memory")
+            .queryName(qname)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        query.awaitTermination()
     return sdf.sparkSession.table(qname)
 
 
@@ -121,11 +131,11 @@ def run_foreach_batch(
     checkpoint: str | None = None,
 ) -> None:
     """Drain a streaming DataFrame through ``foreachBatch(fn)`` (availableNow)."""
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
-    query = (
-        sdf.writeStream.trigger(availableNow=True)
-        .foreachBatch(fn)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    query.awaitTermination()
+    with _checkpoint(checkpoint) as ckpt:
+        query = (
+            sdf.writeStream.trigger(availableNow=True)
+            .foreachBatch(fn)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        query.awaitTermination()

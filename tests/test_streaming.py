@@ -203,6 +203,30 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert first_window == [1]
 
 
+def test_drains_remove_only_their_own_checkpoints(spark, tmp_path, monkeypatch):
+    """A drain without a caller checkpoint removes the temporary one it
+    made; a caller-owned checkpoint (what crash replay restarts from) is
+    left in place."""
+    import tempfile
+
+    temp_root = tmp_path / "tmp"
+    temp_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp_root))
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+
+    def stream():
+        return stream_dir(spark, src, "id BIGINT")
+
+    assert run_available_now(stream(), output_mode="append").count() == 5
+    run_foreach_batch(stream(), lambda df, batch_id: None)
+    assert list(temp_root.iterdir()) == []
+
+    owned = str(tmp_path / "ckpt")
+    run_foreach_batch(stream(), lambda df, batch_id: None, checkpoint=owned)
+    assert os.listdir(os.path.join(owned, "commits"))
+
+
 def test_st5_registry_contract(spark, sf_dir):
     """ST5 as a registered query: every finalized window carries the batch
     count (the late replay contributed nothing), each window is emitted
