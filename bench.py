@@ -180,6 +180,13 @@ def _steal_ticks() -> int | None:
         return None
 
 
+def default_driver_mem(host_bytes: int) -> str:
+    """Driver heap for the suite's ~420 jobs through one JVM: half the
+    host's memory, capped at 16g (headroom over the 8g session default
+    cuts GC share), so the heap never outgrows the host it runs on."""
+    return f"{max(1, min(16, host_bytes // 2**31))}g"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -191,9 +198,8 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = None
-    # The suite runs ~420 jobs through one JVM; headroom over the 8g
-    # default cuts GC share while staying far under the host's memory.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    host_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", default_driver_mem(host_bytes))
     spark = get_spark(app_name="bdi-bench", cpus=cpus)
     # Size the shuffle for the benched scale factor: at sf<=0.1 the whole
     # dataset is ~100MB, so 8 reduce partitions keep every partition well
@@ -459,6 +465,12 @@ def _stdout_queries(timings: dict[str, float], out: dict) -> dict[str, float]:
     day (the old "60 slowest this run" rule produced six false
     dropped_from_bench rows per round)."""
     sel = {k: round(timings[k], 2) for k in STDOUT_PINNED if k in timings}
+    pinned_len = len(json.dumps({**out, "queries": sel}, separators=(",", ":")))
+    if pinned_len > 1900:
+        raise ValueError(
+            f"the STDOUT_PINNED queries alone make a {pinned_len}-char stdout line, "
+            "over the 1900-char budget; the line no longer fits the tail parser"
+        )
     for k in sorted(timings):
         if k in sel:
             continue

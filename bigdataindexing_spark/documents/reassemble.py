@@ -5,136 +5,69 @@ Spark-native equivalent of the reference's recursive point-read
 Redis GET per nested object (N+1 round-trips), we run one DataFrame DAG —
 equi-joins against the ``edges`` relation, children aggregated with
 ``collect_list(struct(ord, ...))`` and re-ordered by the stored ordinal,
-then re-nested with ``struct()``. The whole store reassembles in two
-shuffle stages regardless of document count.
+then re-nested with ``named_struct``. The DAG is one ``spark.sql``
+statement, a few driver round trips to build where the Column API made
+hundreds. It runs a fixed number of joins and one aggregation, however
+many documents the store holds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from bigdataindexing_spark.documents.shred import ShreddedTables
 
-
-def _cost_share_struct(cs: DataFrame, prefix: str) -> F.Column:
-    return F.struct(
-        F.col(f"{prefix}object_id").alias("objectId"),
-        F.lit("membercostshare").alias("objectType"),
-        F.col(f"{prefix}org").alias("_org"),
-        F.col(f"{prefix}deductible").alias("deductible"),
-        F.col(f"{prefix}copay").alias("copay"),
-    )
+# (object_id, doc). Field order matches PLAN_SCHEMA exactly, so
+# ``to_json(doc)`` is a canonical rendering (schema order is struct order).
+_SQL = """
+WITH cs AS (
+  SELECT object_id AS cs_id,
+         named_struct('objectId', object_id, 'objectType', 'membercostshare', '_org', org,
+                      'deductible', deductible, 'copay', copay) AS cs
+  FROM {member_cost_shares}),
+ps_doc AS (
+  SELECT ps_id,
+         named_struct('objectId', ps_id, 'objectType', 'planservice', '_org', org,
+                      'linkedService', linkedService,
+                      'planserviceCostShares', planserviceCostShares) AS ps_doc
+  FROM (SELECT object_id AS ps_id, org FROM {plan_services})
+  LEFT JOIN (SELECT parent_id AS ps_id, child_id AS svc_id FROM {edges}
+             WHERE field = 'linkedService') USING (ps_id)
+  LEFT JOIN (SELECT object_id AS svc_id,
+                    named_struct('objectId', object_id, 'objectType', 'service',
+                                 '_org', org, 'name', name) AS linkedService
+             FROM {services}) USING (svc_id)
+  LEFT JOIN (SELECT parent_id AS ps_id, child_id AS cs_id FROM {edges}
+             WHERE field = 'planserviceCostShares') USING (ps_id)
+  LEFT JOIN (SELECT cs_id, cs AS planserviceCostShares FROM cs) USING (cs_id)),
+lps AS (
+  -- children gathered per plan, re-ordered by the stored ordinal
+  SELECT plan_id AS object_id,
+         transform(array_sort(collect_list(struct(ord, ps_doc))), x -> x.ps_doc)
+           AS linkedPlanServices
+  FROM (SELECT parent_id AS plan_id, ord, child_id AS ps_id FROM {edges}
+        WHERE field = 'linkedPlanServices')
+  JOIN ps_doc USING (ps_id)
+  GROUP BY plan_id)
+SELECT object_id,
+       named_struct(
+         'objectId', object_id, 'objectType', 'plan', '_org', org,
+         'planType', plan_type, 'creationDate', creation_date,
+         'planCostShares', planCostShares,
+         'linkedPlanServices', coalesce(linkedPlanServices, CAST(array() AS
+           array<struct<objectId:string,objectType:string,_org:string,
+                        linkedService:struct<objectId:string,objectType:string,
+                                             _org:string,name:string>,
+                        planserviceCostShares:struct<objectId:string,objectType:string,
+                                                     _org:string,deductible:bigint,
+                                                     copay:bigint>>>))) AS doc
+FROM (SELECT object_id, org, plan_type, creation_date FROM {plans})
+LEFT JOIN (SELECT parent_id AS plan_id, child_id AS cs_id FROM {edges}
+           WHERE field = 'planCostShares' AND parent_type = 'plan') ON object_id = plan_id
+LEFT JOIN (SELECT cs_id, cs AS planCostShares FROM cs) USING (cs_id)
+LEFT JOIN lps USING (object_id)"""
 
 
 def reassemble(t: ShreddedTables) -> DataFrame:
-    """(object_id, doc) — one nested plan document per plans row.
-
-    Field order matches PLAN_SCHEMA exactly, so ``to_json(doc)`` is a
-    canonical rendering (schema order is struct order in Spark).
-    """
-    # --- planservice sub-documents -------------------------------------
-    svc_edge = t.edges.filter(F.col("field") == "linkedService").select(
-        F.col("parent_id").alias("ps_id"), F.col("child_id").alias("svc_id")
-    )
-    pscs_edge = t.edges.filter(F.col("field") == "planserviceCostShares").select(
-        F.col("parent_id").alias("ps_id"), F.col("child_id").alias("cs_id")
-    )
-    svc = t.services.select(
-        F.col("object_id").alias("svc_id"),
-        F.struct(
-            F.col("object_id").alias("objectId"),
-            F.lit("service").alias("objectType"),
-            F.col("org").alias("_org"),
-            F.col("name").alias("name"),
-        ).alias("linkedService"),
-    )
-    cs = t.member_cost_shares.select(
-        F.col("object_id").alias("cs_id"),
-        F.struct(
-            F.col("object_id").alias("objectId"),
-            F.lit("membercostshare").alias("objectType"),
-            F.col("org").alias("_org"),
-            F.col("deductible").alias("deductible"),
-            F.col("copay").alias("copay"),
-        ).alias("planserviceCostShares"),
-    )
-    ps_doc = (
-        t.plan_services.select(F.col("object_id").alias("ps_id"), F.col("org"))
-        .join(svc_edge, "ps_id", "left")
-        .join(svc, "svc_id", "left")
-        .join(pscs_edge, "ps_id", "left")
-        .join(cs, "cs_id", "left")
-        .select(
-            "ps_id",
-            F.struct(
-                F.col("ps_id").alias("objectId"),
-                F.lit("planservice").alias("objectType"),
-                F.col("org").alias("_org"),
-                F.col("linkedService"),
-                F.col("planserviceCostShares"),
-            ).alias("ps_doc"),
-        )
-    )
-
-    # --- plan root: planCostShares + ordered linkedPlanServices ---------
-    pcs_edge = t.edges.filter(
-        (F.col("field") == "planCostShares") & (F.col("parent_type") == "plan")
-    ).select(F.col("parent_id").alias("plan_id"), F.col("child_id").alias("cs_id"))
-    pcs = t.member_cost_shares.select(
-        F.col("object_id").alias("cs_id"),
-        F.struct(
-            F.col("object_id").alias("objectId"),
-            F.lit("membercostshare").alias("objectType"),
-            F.col("org").alias("_org"),
-            F.col("deductible").alias("deductible"),
-            F.col("copay").alias("copay"),
-        ).alias("planCostShares"),
-    )
-    lps_edge = t.edges.filter(F.col("field") == "linkedPlanServices").select(
-        F.col("parent_id").alias("plan_id"),
-        F.col("ord"),
-        F.col("child_id").alias("ps_id"),
-    )
-    # children gathered per plan, re-ordered by the stored ordinal
-    lps = (
-        lps_edge.join(ps_doc, "ps_id")
-        .groupBy("plan_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("ord"), F.col("ps_doc")))),
-                lambda x: x.getField("ps_doc"),
-            ).alias("linkedPlanServices")
-        )
-    )
-
-    return (
-        t.plans.select(
-            F.col("object_id"), F.col("org"), F.col("plan_type"), F.col("creation_date")
-        )
-        .join(pcs_edge, F.col("object_id") == F.col("plan_id"), "left")
-        .drop("plan_id")
-        .join(pcs, "cs_id", "left")
-        .join(lps.withColumnRenamed("plan_id", "object_id"), "object_id", "left")
-        .select(
-            "object_id",
-            F.struct(
-                F.col("object_id").alias("objectId"),
-                F.lit("plan").alias("objectType"),
-                F.col("org").alias("_org"),
-                F.col("plan_type").alias("planType"),
-                F.col("creation_date").alias("creationDate"),
-                F.col("planCostShares"),
-                F.coalesce(
-                    F.col("linkedPlanServices"),
-                    F.array().cast(
-                        "array<struct<objectId:string,objectType:string,_org:string,"
-                        "linkedService:struct<objectId:string,objectType:string,"
-                        "_org:string,name:string>,"
-                        "planserviceCostShares:struct<objectId:string,"
-                        "objectType:string,_org:string,deductible:bigint,copay:bigint>>>"
-                    ),
-                ).alias("linkedPlanServices"),
-            ).alias("doc"),
-        )
-    )
+    """(object_id, doc) — one nested plan document per plans row."""
+    return t.plans.sparkSession.sql(_SQL, **t.as_dict())

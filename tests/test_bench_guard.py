@@ -25,6 +25,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -207,6 +209,26 @@ def test_stdout_query_selection_is_stable():
     out = dict(base_out)
     out["queries"] = sel_a
     assert len(json.dumps(out, separators=(",", ":"))) <= 1950
+
+
+def test_stdout_pinned_queries_over_budget_fail_loudly():
+    """When the pinned names alone overflow the 1900-char budget, the
+    selection must raise instead of printing a line the tail parser
+    cannot read."""
+    import bench
+
+    out = {"metric": "total_query_wall_sec", "queries": {}, "detail": "x" * 1900}
+    with pytest.raises(ValueError, match="1900-char budget"):
+        bench._stdout_queries({n: 1.0 for n in bench.STDOUT_PINNED}, out)
+
+
+def test_default_driver_mem_fits_the_host():
+    import bench
+
+    gib = 2**30
+    assert bench.default_driver_mem(15 * gib) == "7g"
+    assert bench.default_driver_mem(64 * gib) == "16g"
+    assert bench.default_driver_mem(gib) == "1g"
 
 
 def test_guard_rejects_slow_index_build():

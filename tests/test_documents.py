@@ -21,11 +21,18 @@ from bigdataindexing_spark.documents.reassemble import reassemble
 from bigdataindexing_spark.documents.schema import (
     PLAN_SCHEMA,
     REQUIRED_PATHS,
+    local_strings_df,
     make_plan,
     parsed_plans,
     raw_plan_json,
 )
-from bigdataindexing_spark.documents.shred import shred
+from bigdataindexing_spark.documents.shred import (
+    STORE_SCHEMAS,
+    ShreddedTables,
+    read_tables,
+    shred,
+    write_tables,
+)
 from bigdataindexing_spark.documents.validate import validate
 
 N_DOCS = 20
@@ -275,3 +282,149 @@ def test_precondition_gate(spark, store):
     assert [r["object_id"] for r in accepted.collect()] == ["plan-5"]
     rej = {r["object_id"]: r["status"] for r in rejected.collect()}
     assert rej == {"plan-6": 412, "plan-7": 404, "plan-999": 404}
+
+
+def _parse(spark, docs):
+    return local_strings_df(spark, [json.dumps(d) for d in docs]).select(
+        F.from_json("value", PLAN_SCHEMA).alias("doc")
+    )
+
+
+def _service(oid):
+    """A full linkedPlanServices element with fresh ids."""
+    el = make_plan(7)["linkedPlanServices"][0]
+    el["objectId"] = oid
+    el["linkedService"]["objectId"] = f"svc-{oid}"
+    el["planserviceCostShares"]["objectId"] = f"mcs-{oid}"
+    return el
+
+
+def _array_edges(t, plan_id):
+    """[(child_id, ord)] of a plan's linkedPlanServices edges, by ordinal."""
+    rows = (
+        t.edges.filter(
+            (F.col("field") == "linkedPlanServices") & (F.col("parent_id") == plan_id)
+        )
+        .select("child_id", "ord")
+        .collect()
+    )
+    return sorted(((r["child_id"], r["ord"]) for r in rows), key=lambda r: r[1])
+
+
+def test_merge_append_to_plan_without_children_starts_at_zero(spark, store):
+    # plan-4 has no linkedPlanServices (make_plan: 4 % 4 == 0 services)
+    assert _array_edges(store, "plan-4") == []
+    patch = {"objectId": "plan-4", "linkedPlanServices": [_service("new-a"), _service("new-b")]}
+    merged = merge_mod.merge(store, _parse(spark, [patch]))
+    assert _array_edges(merged, "plan-4") == [("new-a", 0), ("new-b", 1)]
+    lps = _docs_json(reassemble(merged))["plan-4"]["linkedPlanServices"]
+    assert lps == [_service("new-a"), _service("new-b")]
+
+
+def test_merge_interleaved_children_keep_ordinals_and_append_in_patch_order(spark, store):
+    # plan-7 holds ps-7-0, ps-7-1, ps-7-2 at ordinals 0, 1, 2
+    patch = {
+        "objectId": "plan-7",
+        "linkedPlanServices": [
+            _service("new-a"),
+            {"objectId": "ps-7-1"},
+            _service("new-b"),
+            {"objectId": "ps-7-0"},
+        ],
+    }
+    merged = merge_mod.merge(store, _parse(spark, [patch]))
+    assert _array_edges(merged, "plan-7") == [
+        ("ps-7-0", 0),
+        ("ps-7-1", 1),
+        ("ps-7-2", 2),
+        ("new-a", 3),
+        ("new-b", 4),
+    ]
+
+
+def test_merge_batch_leaves_plan_without_new_children_unchanged(spark, store):
+    patches = [
+        # an existing child's field update: no new child for plan-5
+        {
+            "objectId": "plan-5",
+            "linkedPlanServices": [
+                {
+                    "objectId": "ps-5-0",
+                    "planserviceCostShares": {"objectId": "mcs-s5-0", "copay": 3},
+                }
+            ],
+        },
+        {"objectId": "plan-6", "linkedPlanServices": [_service("new-6")]},
+    ]
+    merged = merge_mod.merge(store, _parse(spark, patches))
+
+    def plan_edges(t):
+        return sorted(map(tuple, t.edges.filter(F.col("parent_id") == "plan-5").collect()))
+
+    assert plan_edges(merged) == plan_edges(store)
+    assert _array_edges(merged, "plan-6") == [("ps-6-0", 0), ("ps-6-1", 1), ("new-6", 2)]
+
+
+def test_cascade_delete_absent_id_is_noop(store):
+    after = del_mod.cascade_delete(store, ["plan-absent"])
+    for name, df in store.as_dict().items():
+        assert sorted(map(tuple, getattr(after, name).collect())) == sorted(
+            map(tuple, df.collect())
+        ), name
+
+
+def test_cascade_delete_keeps_null_keyed_rows(spark, store):
+    """A NULL key never matches a victim, so the delete keeps the row —
+    as a left-anti join against the closure would."""
+    nulls = {
+        "plans": [(None, "acme.com", "inNetwork", "01-01-2020")],
+        "plan_services": [(None, "acme.com")],
+        "services": [(None, "acme.com", "X ray")],
+        "member_cost_shares": [(None, "acme.com", 1, 2)],
+        "edges": [
+            ("plan", None, "linkedPlanServices", 0, "planservice", "ps-7-0"),
+            (None, "plan-7", "planCostShares", 0, "membercostshare", "mcs-p7"),
+        ],
+    }
+    t = ShreddedTables(
+        **{
+            name: df.unionByName(spark.createDataFrame(nulls[name], STORE_SCHEMAS[name]))
+            for name, df in store.as_dict().items()
+        }
+    )
+    after = del_mod.cascade_delete(t, ["plan-7"])
+    for name, rows in nulls.items():
+        kept = [tuple(r) for r in getattr(after, name).collect() if None in tuple(r)]
+        assert sorted(kept, key=repr) == sorted(rows, key=repr), name
+    assert after.plans.filter(F.col("object_id") == "plan-7").count() == 0
+    assert after.member_cost_shares.filter(F.col("object_id") == "mcs-p7").count() == 0
+
+
+def test_cascade_delete_matches_quoted_ids_literally(spark, store):
+    odd = "plan-'7\\x"
+    row = spark.createDataFrame(
+        [(odd, "acme.com", "inNetwork", "01-01-2020")], STORE_SCHEMAS["plans"]
+    )
+    t = ShreddedTables(**{**store.as_dict(), "plans": store.plans.unionByName(row)})
+    after = del_mod.cascade_delete(t, [odd, "plan-7'"])
+    assert after.plans.filter(F.col("object_id") == odd).count() == 0
+    assert after.plans.count() == N_DOCS
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+@pytest.mark.parametrize("n_victims", [1, 50])
+def test_cascade_delete_store_write_runs_seven_jobs(spark, tmp_path, n_victims):
+    """The victim closure is computed once — two ``edges`` scans — and
+    every relation is pruned by a literal-set filter, so reading a store,
+    deleting a batch and writing the result costs 2 + 5 jobs (one per
+    relation write) whatever the batch size."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    write_tables(shred(parsed_plans(spark, 60)), src)
+    victims = [f"plan-{i}" for i in range(1, 1 + n_victims)]
+    lo = _next_job_id(spark)
+    write_tables(del_mod.cascade_delete(read_tables(spark, src), victims), out)
+    assert _next_job_id(spark) - lo == 7
+    assert read_tables(spark, out).plans.count() == 60 - n_victims
